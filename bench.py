@@ -525,10 +525,9 @@ def write_bench_md(timings, total, scaling, walls=None, codec=None,
             "design — the reference itself reverts exponential-weight",
             "quantiles to offline (the commented-out block at",
             "roll_vec.h:1735-1760 documents its online dual-multiset is",
-            "equal-weight only). The engine's equal-weight online",
-            "kernel (kernels.online_quantile, O(log w)/row) is",
-            "property-tested bit-identical to the offline kernel and",
-            "carries state across chunk/stream boundaries.",
+            "equal-weight only). The engine has no online quantile:",
+            "streamed quantiles fold the same offline kernel over a",
+            "carried window tail (kernels.carry_step).",
             "",
             "Why N=2: a zero-memory pure-CPU calibration loop (below) shows",
             "this sandbox's 32 vCPUs deliver only ~22 effective cores — ANY",

@@ -105,4 +105,4 @@ __all__ = [
     "roll_time",
 ]
 
-__version__ = "0.4.0"
+__version__ = "0.5.0"

@@ -20,17 +20,11 @@ Mirrors the reference's argument contract (SURVEY.md §2.1; reference
 - ``na_restore``    if True, the output at a missing input position is
                 NULL regardless of window state (reference passthrough
                 ``roll_vec.h:497-501``).
-- ``online``    algorithm hint. The Spark engine picks the physical
-                strategy itself (Catalyst WindowExec for equal weights,
-                Arrow kernels otherwise); ``online`` is honoured inside
-                the Arrow path the same way the reference honours it:
-                equal/exponential weights -> O(1)-per-row recursion,
-                arbitrary weights -> offline recompute.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -71,7 +65,6 @@ class RollSpec:
     min_obs: int | None = None  # None -> width
     complete_obs: bool = False
     na_restore: bool = False
-    online: bool = True
     center: bool = True
     scale: bool = False
     p: float = 0.5  # quantile only
@@ -79,7 +72,6 @@ class RollSpec:
     # into overlap-padded chunks (operators.chunked) so one giant
     # conversation cannot pin a single task; None = one task per series
     max_group_rows: int | None = None
-    extra: dict = field(default_factory=dict, compare=False)
 
     def __post_init__(self) -> None:
         if self.width < 1:

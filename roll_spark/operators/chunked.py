@@ -19,9 +19,10 @@ evaluates its own rows EXACTLY as the unchunked series would:
 
 This is stateless (no cross-task state carry), shuffle-parallel on
 (series, chunk_id), and adds width-1 duplicated rows per chunk —
-negligible when chunk_rows >> width. The alternative (sequential state
-carry, kernels.online_* ``state=``) is kept for streaming-style
-resumption; overlap wins at batch scale because chunks run in PARALLEL.
+negligible when chunk_rows >> width. The same argument applied along
+time is the streaming fold (kernels.carry_step): a micro-batch carries
+its series' last width-1 raw values instead of a pad chunk. Batch
+evaluation overlaps instead of carrying because chunks run in PARALLEL.
 """
 
 from __future__ import annotations

@@ -1,18 +1,22 @@
-"""Vectorized numpy kernels for the Arrow (applyInPandas) path.
+"""Vectorized numpy kernels: the Arrow path's and the streaming fold's.
 
-Two algorithm families, mirroring the reference's online/offline split
-(/root/reference/src/roll.cpp:378-394):
+One kernel family. Every ``conv_*`` kernel is a stateless function of
+the whole series whose output row i depends only on the trailing
+window ending at i:
 
-- ``conv_*``  offline kernels vectorized as 1-D convolutions: the
-  rolling weighted sum with newest-last weight alignment
-  (roll_vec.h:556 reads arma_weights[n-count-1]) is exactly
-  ``np.convolve(x, reversed(weights))``. Arbitrary weights, C speed,
-  O(n*width) — the production path inside Arrow UDFs.
-- ``online_*`` sequential O(1)-per-row recursions (lambda-recursion /
-  West co-moment updates, roll_vec.h:447, :2190, :3677). Used (a) to
-  prove online == offline equivalence the way the reference's own test
-  suite does, and (b) to carry state across chunk boundaries for the
-  skew path.
+- the weighted sums are 1-D convolutions: the rolling weighted sum with
+  newest-last weight alignment (roll_vec.h:556 reads
+  arma_weights[n-count-1]) is exactly ``np.convolve(x, reversed(weights))``;
+- (co)moments, quantiles, ranks and window reduces run over strided
+  sliding-window views, row-blocked to bound memory.
+
+The reference's second family, the O(1)-per-row online recursions
+(src/roll.cpp:378-394), is not ported. A state-carrying evaluation of
+any window kernel is :func:`carry_step`: the batch is evaluated with the
+series' last width-1 raw values in front, which reproduces every one of
+its windows exactly (operators.chunked's overlap-pad argument, applied
+along time). The time-decay EWMA has no bounded window, so
+:func:`online_ewma_time` carries a three-number decay state instead.
 
 All kernels take float64 arrays with NaN as missing and return float64
 with NaN for NULL; gates (min_obs, na_restore, eps clamps) replicate
@@ -23,8 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 
-EPS = float(np.finfo(np.float64).eps)
-SQRT_EPS = float(np.sqrt(EPS))
+from roll_spark.config import EPS, SQRT_EPS
 
 
 def _prep(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -112,7 +115,7 @@ def _pair_window_moments(x, y, width, weights):
     there is NO uncentered-moment cancellation: constant windows give
     exactly 0, any data scale gives ~eps relative error. This is the
     float64 equivalent of the reference's long-double accumulators
-    (roll_vec.h:410-415); the one-pass recursions remain in online_*.
+    (roll_vec.h:410-415).
     Pass y=None for single-series moments (ssy/ssxy/muy then alias x's).
     """
     x = np.asarray(x, dtype=np.float64)
@@ -271,6 +274,41 @@ def conv_var(x, width, weights=None, min_obs=None, na_restore=False, center=True
 
 def conv_sd(x, width, weights=None, min_obs=None, na_restore=False, center=True):
     return np.sqrt(conv_var(x, width, weights, min_obs, na_restore, center))
+
+
+def conv_scale(x, width, weights=None, min_obs=None, na_restore=False,
+               center=True, scale=True):
+    """Rolling z-score (roll_scale, reference RollScaleOfflineVec,
+    roll_vec.h:3016-3180): the MOST RECENT NON-NA value in the window,
+    centered on the window mean and, with ``scale``, divided by the
+    window sd; NULL unless n_obs > 1 and var > eps (no clamp-to-zero).
+    The z-score's mean and centered sum of squares are the exact
+    per-window two-pass ones, so a constant window has var exactly 0 and
+    gates to NULL, and every output depends on its window alone."""
+    x = np.asarray(x, dtype=np.float64)
+    min_obs = width if min_obs is None else min_obs
+    ok = ~np.isnan(x)
+    # most recent non-NA, invalidated once it falls out of the window
+    idx = np.arange(len(x))
+    last_idx = np.maximum.accumulate(np.where(ok, idx, -1))
+    valid_last = (last_idx >= idx - width + 1) & (last_idx >= 0)
+    x_last = np.where(valid_last, x[np.maximum(last_idx, 0)], np.nan)
+    s = WindowSums(x, width, weights)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        mean = s.sum_wx / s.sum_w
+        if scale:
+            if center:
+                n_obs, sum_w, sumsq_w, ss, _, _, mean, _ = _pair_window_moments(
+                    x, None, width, weights
+                )
+            else:
+                n_obs, sum_w, sumsq_w, ss = s.n_obs, s.sum_w, s.sumsq_w(), s.sum_wx2()
+            v = ss / (sum_w - sumsq_w / sum_w)
+        centered = x_last - mean if center else x_last
+        res = (np.where((s.n_obs > 1) & (v > EPS), centered / np.sqrt(v), np.nan)
+               if scale else centered)
+        out = np.where(s.n_obs >= min_obs, res, np.nan)
+    return _restore(out, x, na_restore)
 
 
 def conv_cov(x, y, width, weights=None, min_obs=None, na_restore=False, center=True):
@@ -664,73 +702,6 @@ def conv_lm_k(X, y, width, weights=None, min_obs=None, intercept=True):
     return res
 
 
-# ---------------------------------------------------------------------------
-# online recursions (sequential, O(1)/row) — the reference's online family
-# ---------------------------------------------------------------------------
-
-
-
-def _check_carry_width(hist, width, kernel: str) -> None:
-    """A restored carry longer than the window means the stream resumed
-    with a SMALLER width than the checkpointed one. Unlike online_minmax
-    (whose raw-value carry lets it truncate and recover), the running
-    sums / multisets these kernels carry are tied to the old width —
-    silently continuing would produce wrong values, so fail loudly."""
-    if len(hist) > width:
-        raise ValueError(
-            f"{kernel}: state width mismatch — restored carry holds "
-            f"{len(hist)} trailing values but width={width}; resuming a "
-            "stream with a smaller width than its checkpoint is not "
-            "supported (restart from a fresh checkpoint)"
-        )
-
-
-def online_mean(x, width, weights=None, min_obs=None, na_restore=False,
-                state: dict | None = None):
-    """Lambda-recursion weighted mean (roll_vec.h:814-927).
-
-    ``state`` carries (sum_w, sum_x, n_obs, tail values) across chunk
-    boundaries for the skew path; pass the dict returned by a previous
-    call on the preceding chunk of the same series.
-    """
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    w = np.ones(width) if weights is None else np.asarray(weights, dtype=np.float64)[-width:]
-    lam = 1.0 if width == 1 or len(w) < 2 else w[-2] / w[-1]
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        sum_w = sum_x = 0.0
-        n_obs = 0
-        hist = []  # trailing width-1 values for eviction
-    else:
-        sum_w, sum_x, n_obs = state["sum_w"], state["sum_x"], state["n_obs"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_mean")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            n_obs += 1
-            sum_w = lam * sum_w + w[-1]
-            sum_x = lam * sum_x + w[-1] * xi
-        else:
-            sum_w = lam * sum_w
-            sum_x = lam * sum_x
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                n_obs -= 1
-                # weight of the evicted slot after this step's decay: w[-width]*lam
-                sum_w -= lam * w[0]
-                sum_x -= lam * w[0] * old
-        if (not na_restore or not is_na) and n_obs >= min_obs and sum_w != 0:
-            out[i] = sum_x / sum_w
-    final_state = {"sum_w": sum_w, "sum_x": sum_x, "n_obs": n_obs, "hist": hist[-(width):]}
-    return out, final_state
-
-
 def conv_cov_matrix(
     X, width, weights=None, min_obs=None, center=True, scale=False,
     complete_obs=True,
@@ -896,265 +867,6 @@ def conv_cov_xy_matrix(
     return out
 
 
-def online_sum(x, width, weights=None, min_obs=None, na_restore=False,
-               state: dict | None = None):
-    """Lambda-recursion weighted sum (reference RollSumOnlineVec,
-    roll_vec.h:383-511), with chunk-boundary ``state`` like online_mean."""
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    w = np.ones(width) if weights is None else np.asarray(weights, dtype=np.float64)[-width:]
-    lam = 1.0 if width == 1 or len(w) < 2 else w[-2] / w[-1]
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        sum_x = 0.0
-        n_obs = 0
-        hist = []
-    else:
-        sum_x, n_obs, hist = state["sum_x"], state["n_obs"], list(state["hist"])
-        _check_carry_width(hist, width, "online_sum")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        sum_x = lam * sum_x
-        if not is_na:
-            n_obs += 1
-            sum_x += w[-1] * xi
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                n_obs -= 1
-                sum_x -= lam * w[0] * old
-        if (not na_restore or not is_na) and n_obs >= min_obs:
-            out[i] = sum_x
-    return out, {"sum_x": sum_x, "n_obs": n_obs, "hist": hist[-width:]}
-
-
-def online_var(x, width, min_obs=None, na_restore=False,
-               state: dict | None = None):
-    """Equal-weight online variance: Welford insert + reverse-Welford
-    eviction (the reference's online kernel keeps the same running
-    (mean, M2) pair in long doubles, roll_vec.h:2114-2425). The engine's
-    production path is the exact two-pass conv_var; this sequential twin
-    exists to (a) prove online == offline the way the reference's test
-    suite does and (b) carry state across chunk/stream boundaries."""
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        n_obs, mean, M2 = 0, 0.0, 0.0
-        hist = []
-    else:
-        n_obs, mean, M2 = state["n_obs"], state["mean"], state["M2"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_var")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            n_obs += 1
-            d = xi - mean
-            mean += d / n_obs
-            M2 += d * (xi - mean)
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                if n_obs == 1:
-                    n_obs, mean, M2 = 0, 0.0, 0.0
-                else:
-                    d = old - mean
-                    mean = (n_obs * mean - old) / (n_obs - 1)
-                    M2 -= d * (old - mean)
-                    n_obs -= 1
-        if (not na_restore or not is_na) and n_obs >= max(min_obs, 2):
-            v = M2 / (n_obs - 1)
-            out[i] = v if v > EPS else (0.0 if v > -EPS else np.nan)
-    return out, {"n_obs": n_obs, "mean": mean, "M2": M2, "hist": hist[-width:]}
-
-
-def online_scale(x, width, min_obs=None, na_restore=False,
-                 state: dict | None = None):
-    """Online rolling z-score — the sequential state-carrying twin of
-    window_ops.roll_scale's center=True/scale=True form (reference
-    RollScaleOfflineVec, roll_vec.h:3016-3180): the value scaled is the
-    MOST RECENT NON-NA in the window; NULL unless n_obs > 1 AND
-    var > eps (no clamp-to-zero). Same Welford insert/evict state as
-    online_var plus the raw window for the x_last scan."""
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        n_obs, mean, M2 = 0, 0.0, 0.0
-        hist = []
-    else:
-        n_obs, mean, M2 = state["n_obs"], state["mean"], state["M2"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_scale")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            n_obs += 1
-            d = xi - mean
-            mean += d / n_obs
-            M2 += d * (xi - mean)
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                if n_obs == 1:
-                    n_obs, mean, M2 = 0, 0.0, 0.0
-                else:
-                    d = old - mean
-                    mean = (n_obs * mean - old) / (n_obs - 1)
-                    M2 -= d * (old - mean)
-                    n_obs -= 1
-        if (not na_restore or not is_na) and n_obs >= max(min_obs, 2):
-            # the x_last scan doubles as the exact zero-variance test:
-            # after evictions the carried M2 keeps ~eps*mean^2 residue,
-            # so an all-equal window (true var 0, batch emits NULL via
-            # var > eps) would otherwise emit a garbage z from the
-            # residue — compare window values directly instead.
-            x_last, all_eq = np.nan, True
-            for h in reversed(hist):
-                if not np.isnan(h):
-                    if np.isnan(x_last):
-                        x_last = h
-                    elif h != x_last:
-                        all_eq = False
-                        break
-            v = M2 / (n_obs - 1)
-            if not all_eq and v > EPS:
-                out[i] = (x_last - mean) / np.sqrt(v)
-    return out, {"n_obs": n_obs, "mean": mean, "M2": M2, "hist": hist[-width:]}
-
-
-def online_cov(x, y, width, min_obs=None, na_restore=False,
-               state: dict | None = None):
-    """Equal-weight online covariance: bivariate Welford co-moment with
-    eviction (reference RollCovOnlineVecXY, roll_vec.h:3801-4152;
-    pairwise-complete rows only)."""
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        n_obs, mx, my, C = 0, 0.0, 0.0, 0.0
-        hist = []
-    else:
-        n_obs, mx, my, C = state["n_obs"], state["mx"], state["my"], state["C"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_cov")
-    for i in range(n):
-        xi, yi = x[i], y[i]
-        ok = not (np.isnan(xi) or np.isnan(yi))
-        if ok:
-            n_obs += 1
-            dx = xi - mx
-            mx += dx / n_obs
-            my += (yi - my) / n_obs
-            C += dx * (yi - my)
-        hist.append((xi, yi))
-        if len(hist) > width:
-            ox, oy = hist.pop(0)
-            if not (np.isnan(ox) or np.isnan(oy)):
-                if n_obs == 1:
-                    n_obs, mx, my, C = 0, 0.0, 0.0, 0.0
-                else:
-                    dx = ox - mx
-                    mx = (n_obs * mx - ox) / (n_obs - 1)
-                    my_new = (n_obs * my - oy) / (n_obs - 1)
-                    C -= dx * (oy - my_new)
-                    my = my_new
-                    n_obs -= 1
-        if (not na_restore or not (np.isnan(xi) or np.isnan(yi))) \
-                and n_obs >= max(min_obs, 2):
-            out[i] = C / (n_obs - 1)
-    return out, {"n_obs": n_obs, "mx": mx, "my": my, "C": C, "hist": hist[-width:]}
-
-
-def online_quantile(x, width, p, min_obs=None, na_restore=False,
-                    state: dict | None = None):
-    """EQUAL-WEIGHT online rolling quantile via the reference's dual
-    multiset (RollQuantileOnlineVec, roll_vec.h:1694-1953): a `lower`
-    set holding the smallest m order statistics and an `upper` set
-    holding the rest, rebalanced as the window slides, so each row costs
-    one O(log w) search + an O(w)-memmove splice (Python lists stand in
-    for std::multiset: the search is bisect, the splice is a C memmove —
-    in practice far below the offline kernel's O(w log w) sort per row).
-
-    Exponential/arbitrary weights intentionally revert to the offline
-    kernel, exactly like the reference (the commented-out block at
-    roll_vec.h:1735-1760 documents that its online quantile is
-    equal-weight only). Emission is HF2, identical to conv_quantile:
-    c = max(1, ceil(n(1-p))), hi = sorted[n-c], averaged with
-    sorted[n-c-1] on an exact mass tie.
-    """
-    from bisect import bisect_right, insort
-
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        lower: list = []   # smallest m observed values, sorted
-        upper: list = []   # the rest, sorted
-        hist = []
-    else:
-        lower, upper = list(state["lower"]), list(state["upper"])
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_quantile")
-    pp = 1.0 - p
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            if lower and xi <= lower[-1]:
-                insort(lower, xi)
-            else:
-                insort(upper, xi)
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                j = bisect_right(lower, old) - 1
-                if 0 <= j < len(lower) and lower[j] == old:
-                    del lower[j]
-                else:
-                    j = bisect_right(upper, old) - 1
-                    del upper[j]
-        n_obs = len(lower) + len(upper)
-        if n_obs:
-            # smallest c with fl64(c/n) >= pp — the same division
-            # predicate as the offline scan (see _equal_weight_c)
-            c = max(1, int(np.ceil(pp * n_obs)))
-            if c > 1 and (c - 1) / n_obs >= pp:
-                c -= 1
-            elif c < n_obs and c / n_obs < pp:
-                c += 1
-            c = min(c, n_obs)
-            m = n_obs - c + 1  # lower must hold the m smallest
-            while len(lower) < m:
-                v = upper.pop(0)
-                lower.append(v)
-            while len(lower) > m:
-                v = lower.pop()
-                insort(upper, v)
-        if (not na_restore or not is_na) and n_obs >= max(min_obs, 1):
-            hi = lower[-1]
-            exact = abs(c / n_obs - pp) <= SQRT_EPS
-            if exact and len(lower) >= 2:
-                out[i] = (hi + lower[-2]) / 2.0
-            else:
-                out[i] = hi
-    return out, {"lower": lower, "upper": upper, "hist": hist[-width:]}
-
-
 # ---------------------------------------------------------------------------
 # robust dispersion: rolling MAD
 # ---------------------------------------------------------------------------
@@ -1309,119 +1021,125 @@ def conv_decayed_count(t_us, halflife_s, min_obs=1):
     return out
 
 
+# ---------------------------------------------------------------------------
+# trailing-window reduces: min / max / direct product / idxmin / idxmax
+# ---------------------------------------------------------------------------
 
-def online_minmax(x, width, mode="min", min_obs=1, state=None):
-    """State-carrying rolling min/max for streaming: the carry is the
-    trailing width-1 raw values (the same hist the other online kernels
-    keep). Within a call the whole batch is evaluated as one vectorized
-    sliding-window reduce over [hist | batch] — no per-row Python; the
-    reference's monotonic-deque online min/max (roll_vec.h:1046) is an
-    O(1)/row sequential refinement, but inside an Arrow batch the
-    strided nan-reduce is faster in numpy than a python-level deque.
 
-    Returns ``(out, state)`` with ``state = {"hist": trailing values,
-    "n_obs": observed count in hist}``.
+def _window_reduce(x, width, min_obs, reduce):
+    """Row-blocked strided evaluation of ``reduce(wins, b0) -> (m,)`` over
+    every trailing width-window of the NaN-front-padded ``x``, gated on
+    the window's observed count >= max(min_obs, 1)."""
+    min_obs = width if min_obs is None else min_obs
+    x = np.asarray(x, dtype=np.float64)
+    n = len(x)
+    out = np.full(n, np.nan)
+    xp = np.concatenate([np.full(width - 1, np.nan), x])
+    block = _win_block(width)
+    for b0 in range(0, n, block):
+        b1 = min(n, b0 + block)
+        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
+        n_obs = width - np.isnan(wins).sum(axis=1)
+        out[b0:b1] = np.where(n_obs >= max(min_obs, 1), reduce(wins, b0), np.nan)
+    return out
+
+
+def conv_min(x, width, min_obs=None):
+    """Rolling min over the observed values of each window (np.fmin
+    ignores NaN slots, exactly np.nanmin's reduction)."""
+    return _window_reduce(x, width, min_obs, lambda w, _: np.fmin.reduce(w, axis=1))
+
+
+def conv_max(x, width, min_obs=None):
+    return _window_reduce(x, width, min_obs, lambda w, _: np.fmax.reduce(w, axis=1))
+
+
+def conv_nanprod(x, width, min_obs=None):
+    """Rolling product by DIRECT multiplication of the observed values:
+    zeros and signs are exact by construction (conv_prod's log-sum with
+    zero/sign tracking is the weighted form)."""
+    return _window_reduce(
+        x, width, min_obs, lambda w, _: np.where(np.isnan(w), 1.0, w).prod(axis=1)
+    )
+
+
+def _idx_extreme(x, width, min_obs, offset, mode):
+    """Rolling idxmin/idxmax (window_ops._idx_extreme, roll_vec.h:1345-1659):
+    while the series is still expanding (1-based series row r <= width)
+    the 1-based SERIES position of the extreme, once rolling the 1-based
+    window slot (1 = oldest). Ties break toward the MOST RECENT
+    occurrence (roll_vec.h:1484): arg-reduce over reversed slots, whose
+    first hit is the latest. ``offset`` is the series row of x[0] minus
+    one, so a slice that starts mid-series reports series positions."""
+    fill = np.inf if mode == "min" else -np.inf
+
+    def reduce(wins, b0):
+        rev = np.where(np.isnan(wins), fill, wins)[:, ::-1]
+        a = rev.argmin(axis=1) if mode == "min" else rev.argmax(axis=1)
+        r = offset + b0 + 1 + np.arange(len(wins), dtype=np.int64)
+        return (width - a + np.minimum(r - width, 0)).astype(np.float64)
+
+    return _window_reduce(x, width, min_obs, reduce)
+
+
+def conv_idxmin(x, width, min_obs=None, offset=0):
+    return _idx_extreme(x, width, min_obs, offset, "min")
+
+
+def conv_idxmax(x, width, min_obs=None, offset=0):
+    return _idx_extreme(x, width, min_obs, offset, "max")
+
+
+# ---------------------------------------------------------------------------
+# the carried-tail fold: any window kernel, evaluated batch by batch
+# ---------------------------------------------------------------------------
+
+
+def carry_step(kernel, cols, width, state=None, **kw):
+    """Fold one batch of a series through a stateless window kernel.
+
+    ``cols`` are the kernel's input columns for the batch (one for most
+    ops, (x, y) for cov). The series' state is ``{"tail", "rows"}``: its
+    last width-1 raw values per column (NaN-padded on the left while the
+    series is shorter) and the number of rows seen so far. The batch is
+    evaluated as ``kernel(*concat(tail, batch), width, **kw)[width-1:]``;
+    every output row depends on at most its trailing ``width`` rows, so
+    the result equals the whole-series kernel on those rows, and the new
+    tail is the last width-1 values of the concatenation.
+
+    A tail longer than width-1 (resumed with a smaller width) resumes
+    exactly from its last width-1 values. A tail holding fewer than
+    min(rows, width-1) values (resumed with a larger width) has lost
+    rows the new windows need and raises ValueError.
+
+    Returns ``(out, state)``; ``state["tail"]`` is (len(cols), width-1).
     """
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    hist = (np.asarray(state["hist"], dtype=np.float64)
-            if state is not None else np.full(width - 1, np.nan))
-    if hist.size != width - 1:  # defensive: normalize a mismatched carry
-        # a LONG carry (stream resumed with a smaller width than the
-        # checkpointed state) keeps its trailing width-1 values; a short
-        # one is NaN-padded on the left. np.full with a negative size
-        # would raise, so truncate before padding.
-        hist = hist[max(0, hist.size - (width - 1)):]
-        pad = np.full(width - 1 - hist.size, np.nan)
-        hist = np.concatenate([pad, hist])
-    xp = np.concatenate([hist, x])
-    out = np.full(n, np.nan)
-    if n:
-        wins = np.lib.stride_tricks.sliding_window_view(xp, width)
-        n_obs = width - np.isnan(wins).sum(axis=1)
-        red = np.nanmin if mode == "min" else np.nanmax
-        with np.errstate(invalid="ignore"):
-            import warnings
-
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN
-                res = red(wins, axis=1)
-        out = np.where(n_obs >= max(min_obs, 1), res, np.nan)
-    tail = xp[len(xp) - (width - 1):] if width > 1 else np.empty(0)
-    return out, {"hist": list(tail),
-                 "n_obs": int((~np.isnan(tail)).sum())}
+    xs = np.asarray(cols, dtype=np.float64).reshape(len(cols), -1)
+    k = width - 1
+    rows = 0 if state is None else int(state["rows"])
+    tail = (np.full((len(xs), k), np.nan) if state is None
+            else np.asarray(state["tail"], dtype=np.float64).reshape(len(xs), -1))
+    have = tail.shape[1]
+    if have < min(rows, k):
+        raise ValueError(
+            f"state width mismatch: the carried tail holds {have} values per "
+            f"column, but width={width} after {rows} rows needs the last "
+            f"{min(rows, k)}; restart the stream from a fresh checkpoint"
+        )
+    tail = tail[:, have - min(have, k):]
+    pad = np.full((len(xs), k - tail.shape[1]), np.nan)
+    xp = np.concatenate([pad, tail, xs], axis=1)
+    if kernel in (conv_idxmin, conv_idxmax):
+        kw["offset"] = rows - k
+    out = kernel(*xp, width, **kw)[k:]
+    return out, {"tail": xp[:, xp.shape[1] - k:], "rows": rows + xs.shape[1]}
 
 
-def online_prod(x, width, min_obs=1, state=None):
-    """State-carrying rolling product for streaming: like
-    online_minmax the carry is the trailing width-1 raw values, and the
-    batch is one vectorized nanprod over strided windows — DIRECT
-    multiplication, so zeros and signs are exact by construction (the
-    batch engine's log-sum + zero/sign tracking exists to stay inside a
-    Catalyst Window; a numpy window reduce doesn't need it, and a
-    running-product-with-eviction-division recursion would corrupt on
-    any zero). Returns ``(out, state)``."""
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    hist = (np.asarray(state["hist"], dtype=np.float64)
-            if state is not None else np.full(width - 1, np.nan))
-    if hist.size != width - 1:  # same normalize as online_minmax
-        hist = hist[max(0, hist.size - (width - 1)):]
-        pad = np.full(width - 1 - hist.size, np.nan)
-        hist = np.concatenate([pad, hist])
-    xp = np.concatenate([hist, x])
-    out = np.full(n, np.nan)
-    if n:
-        wins = np.lib.stride_tricks.sliding_window_view(xp, width)
-        nan_mask = np.isnan(wins)
-        n_obs = width - nan_mask.sum(axis=1)
-        prod = np.where(nan_mask, 1.0, wins).prod(axis=1)
-        out = np.where(n_obs >= max(min_obs, 1), prod, np.nan)
-    tail = xp[len(xp) - (width - 1):] if width > 1 else np.empty(0)
-    return out, {"hist": list(tail),
-                 "n_obs": int((~np.isnan(tail)).sum())}
-
-
-def online_idxminmax(x, width, mode="min", min_obs=1, state=None):
-    """State-carrying rolling idxmin/idxmax for streaming — the online
-    twin of window_ops._idx_extreme (reference roll_vec.h:1345-1659):
-    while the series is still expanding (global row r <= width,
-    1-based) the result is the 1-based SERIES position of the extreme;
-    once rolling it is the 1-based window slot (1 = oldest, width =
-    newest). Ties break toward the MOST RECENT occurrence (the
-    reference's ``<=`` candidate compare, roll_vec.h:1484).
-
-    The carry is the trailing width-1 raw values (same as
-    online_minmax) plus the global row count ``r`` — the expanding
-    phase needs the series position, which micro-batch locals can't
-    know. Within a call the whole batch is one vectorized argreduce
-    over reversed window slots (argmin/argmax return the FIRST hit, so
-    reversing makes that the most recent)."""
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    hist = (np.asarray(state["hist"], dtype=np.float64)
-            if state is not None else np.full(width - 1, np.nan))
-    r0 = int(state["r"]) if state is not None else 0
-    if hist.size != width - 1:  # same normalize as online_minmax
-        hist = hist[max(0, hist.size - (width - 1)):]
-        pad = np.full(width - 1 - hist.size, np.nan)
-        hist = np.concatenate([pad, hist])
-    xp = np.concatenate([hist, x])
-    out = np.full(n, np.nan)
-    if n:
-        wins = np.lib.stride_tricks.sliding_window_view(xp, width)
-        n_obs = width - np.isnan(wins).sum(axis=1)
-        rev = wins[:, ::-1]
-        fill = np.inf if mode == "min" else -np.inf
-        filled = np.where(np.isnan(rev), fill, rev)
-        a = filled.argmin(axis=1) if mode == "min" else filled.argmax(axis=1)
-        slot = width - 1 - a  # back to original orientation, 0 = oldest
-        r = r0 + 1 + np.arange(n, dtype=np.int64)  # global 1-based rows
-        idx = slot + 1 + np.minimum(r - width, 0)
-        out = np.where(n_obs >= max(min_obs, 1), idx.astype(np.float64),
-                       np.nan)
-    tail = xp[len(xp) - (width - 1):] if width > 1 else np.empty(0)
-    return out, {"hist": list(tail), "r": r0 + n}
+def online_var(x, width, min_obs=None, na_restore=False, state=None):
+    """Rolling variance carried across batches: :func:`conv_var` through
+    :func:`carry_step`. Returns ``(out, state)``."""
+    return carry_step(conv_var, [x], width, state, min_obs=min_obs,
+                      na_restore=na_restore)
 
 
 def conv_percentrank(x, width, weights=None, min_obs=None, na_restore=False):

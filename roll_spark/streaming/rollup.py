@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from datetime import date
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -328,6 +329,9 @@ class TierStore:
         never sees a half-deleted partition) and then removed;
         ``_recover`` finishes the removal after a crash. Returns the
         dropped day names."""
+        # day names compare as strings, so the cutoff must be canonical
+        # YYYY-MM-DD: '2024-1-5' would sort after every '2024-01-*' day
+        before_day = date.fromisoformat(before_day).isoformat()
         self._recover()
         days = sorted(d[len("_day="):] for d in self._day_dirs())
         doomed = [d for d in days if d < before_day]

@@ -155,13 +155,23 @@ def test_lm_k1_matches_oracle_lm():
         assert_close(res["se_intercept"], want["se_intercept"], f"k1 sei w={width}")
 
 
+def _fold(kernel, x, width, bounds, **kw):
+    st, parts = None, []
+    for lo, hi in zip(bounds, bounds[1:]):
+        seg, st = K.carry_step(kernel, [x[lo:hi]], width, st, **kw)
+        parts.append(seg)
+    return np.concatenate(parts)
+
+
 def test_online_equals_offline_mean():
     """The reference's own equivalence axis (test-roll.R): online
-    recursion == offline recompute, equal + exponential weights."""
+    (batch-by-batch, carried tail) == offline recompute, equal +
+    exponential weights."""
     for width in WIDTHS:
         for weights in _weights_grid(width):
             for name, x in SERIES.items():
-                got, _ = K.online_mean(x, width, weights=weights, min_obs=1)
+                got = _fold(K.conv_mean, x, width, (0, 1, 2, 13, 14, N),
+                            weights=weights, min_obs=1)
                 want = oracle.roll_mean(x, width, weights=weights, min_obs=1)
                 assert_close(got, want, f"online mean w={width} {name}", rtol=1e-6)
 
@@ -171,9 +181,9 @@ def test_online_mean_state_carry():
     the skew-path invariant."""
     x = SERIES["rand_zeros_nas"]
     for width in (3, 7):
-        full, _ = K.online_mean(x, width, min_obs=1)
-        out1, st = K.online_mean(x[:17], width, min_obs=1)
-        out2, _ = K.online_mean(x[17:], width, min_obs=1, state=st)
+        full = K.conv_mean(x, width, min_obs=1)
+        out1, st = K.carry_step(K.conv_mean, [x[:17]], width, min_obs=1)
+        out2, _ = K.carry_step(K.conv_mean, [x[17:]], width, st, min_obs=1)
         got = np.concatenate([out1, out2])
         assert_close(got, full, f"state carry w={width}")
 
@@ -293,7 +303,7 @@ def test_quantile_selection_boundary_combos():
     PRODUCT n*(1-p) rounds to the other side of an attainable mass —
     e.g. p=0.41/n=100, p=0.18/n=50 — a ceil-of-product shortcut selects
     a different order statistic. The equal-weight partition fast path,
-    the weighted scan, and the online dual multiset must all agree on
+    the weighted scan, and the carried-tail fold must all agree on
     exactly these combos."""
     rng = np.random.default_rng(5)
     for p, w in ((0.41, 100), (0.18, 50), (0.18, 150), (0.408, 125),
@@ -302,7 +312,8 @@ def test_quantile_selection_boundary_combos():
         x[rng.random(1200) < 0.1] = np.nan
         fast = K.conv_quantile(x, w, p, min_obs=1)
         scan = K.conv_quantile(x, w, p, weights=np.ones(w), min_obs=1)
-        onl, _ = K.online_quantile(x, w, p, min_obs=1)
+        onl = _fold(K.conv_quantile, x, w, (0, 1, 2, w, w + 1, 700, 1200),
+                    p=p, min_obs=1)
         for name, a in (("fast", fast), ("online", onl)):
             same = (a == scan) | (np.isnan(a) & np.isnan(scan))
             assert same.all(), (name, p, w, np.where(~same)[0][:3])

@@ -1,13 +1,15 @@
-"""Online == offline dual-path equivalence — the reference's own test
-strategy (tests/testthat/test-roll.R checks every op both ways), plus
-the chunk-boundary state-carry contract the streaming/skew paths use.
+"""Carried-tail fold == whole-series kernel — the streaming contract.
 
-Offline = the vectorized conv_* kernels (production Arrow path);
-online = the sequential O(1)-or-O(log w)-per-row recursions mirroring
-the reference's online family (roll_vec.h:383, :2114, :3801, :1694).
-Co-moment recursions accumulate ~kappa*eps differences vs the exact
-two-pass offline kernels, so var/cov compare at 5e-8; sum and the
-dual-multiset quantile are exact.
+The reference checks every op both online and offline
+(tests/testthat/test-roll.R). The engine has one kernel family: a
+state-carrying (online) evaluation is ``kernels.carry_step``, which
+folds each batch through the offline ``conv_*`` kernel with the series'
+last width-1 raw values in front. These tests split series at arbitrary
+points — 1-row batches, NaN bursts across a seam, uneven chunks — and
+require the folded output to equal the whole-series kernel. Window
+reduces, (co)moments and quantiles must match exactly; convolution sums
+(mean/sum) may differ in the last bits, since np.convolve's summation
+order follows memory alignment, so they compare at 1e-9.
 """
 
 from __future__ import annotations
@@ -27,11 +29,25 @@ def _same(a, b, atol=0.0):
     return np.allclose(a, b, equal_nan=True, atol=atol, rtol=0)
 
 
+def _splits(n):
+    """Seams at the head (1-row batches), mid-series and near the end."""
+    return sorted({0, 1, 2, 3, n // 3, n // 3 + 1, 2 * n // 3, n - 1, n} & set(range(n + 1)))
+
+
+def _fold(kernel, cols, width, bounds, **kw):
+    """Evaluate ``cols`` batch by batch through carry_step."""
+    st, parts = None, []
+    for lo, hi in zip(bounds, bounds[1:]):
+        seg, st = K.carry_step(kernel, [c[lo:hi] for c in cols], width, st, **kw)
+        parts.append(seg)
+    return np.concatenate(parts)
+
+
 @pytest.mark.parametrize("width", WIDTHS)
 def test_online_sum_equals_offline(grid_series, width):
     for name, x in grid_series.items():
         for mo in (1, max(1, width // 2), width):
-            got, _ = K.online_sum(x, width, min_obs=mo)
+            got = _fold(K.conv_sum, [x], width, _splits(len(x)), min_obs=mo)
             want = K.conv_sum(x, width, min_obs=mo)
             assert _same(got, want, atol=1e-9), (name, width, mo)
 
@@ -42,25 +58,26 @@ def test_online_var_equals_offline(grid_series, width):
         for mo in (2, width):
             got, _ = K.online_var(x, width, min_obs=mo)
             want = K.conv_var(x, width, min_obs=max(mo, 2))
-            assert _same(got, want, atol=5e-8), (name, width, mo)
+            assert _same(got, want), (name, width, mo)
+            got = _fold(K.conv_var, [x], width, _splits(len(x)), min_obs=mo)
+            assert _same(got, want), (name, width, mo)
 
 
 @pytest.mark.parametrize("width", WIDTHS)
 def test_online_cov_equals_offline(grid_pairs, width):
     for name, (x, y) in grid_pairs.items():
-        got, _ = K.online_cov(x, y, width, min_obs=2)
+        got = _fold(K.conv_cov, [x, y], width, _splits(len(x)), min_obs=2)
         want = K.conv_cov(x, y, width, min_obs=2)
-        assert _same(got, want, atol=5e-8), (name, width)
+        assert _same(got, want), (name, width)
 
 
 @pytest.mark.parametrize("width", WIDTHS)
 @pytest.mark.parametrize("p", (0.1, 0.25, 0.5, 0.75, 0.9))
 def test_online_quantile_equals_offline(grid_series, width, p):
-    """The dual-multiset online quantile is EXACT vs the offline sort —
-    same HF2 selection, same tie-averaging (roll_vec.h:1694-1953)."""
+    """The folded quantile is EXACT vs the whole-series HF2 selection."""
     for name, x in grid_series.items():
         for mo in (1, width):
-            got, _ = K.online_quantile(x, width, p, min_obs=mo)
+            got = _fold(K.conv_quantile, [x], width, _splits(len(x)), p=p, min_obs=mo)
             want = K.conv_quantile(x, width, p, min_obs=mo)
             assert _same(got, want), (name, width, p, mo)
 
@@ -69,8 +86,9 @@ def test_online_quantile_tie_heavy_long_series():
     rng = np.random.default_rng(97)
     x = np.round(rng.normal(100, 5, 3000), 1)  # heavy ties
     x[rng.random(3000) < 0.15] = np.nan
+    x[1495:1510] = np.nan  # a NaN burst across the mid-series seam
     for width, p in ((7, 0.5), (40, 0.25), (200, 0.9)):
-        got, _ = K.online_quantile(x, width, p, min_obs=1)
+        got = _fold(K.conv_quantile, [x], width, _splits(len(x)), p=p, min_obs=1)
         want = K.conv_quantile(x, width, p, min_obs=1)
         assert _same(got, want), (width, p)
 
@@ -78,77 +96,101 @@ def test_online_quantile_tie_heavy_long_series():
 @pytest.mark.parametrize("splits", [(137,), (50, 260), (1, 2, 3)])
 def test_state_carry_across_chunks(splits):
     """Evaluating a series in arbitrary chunks with carried state must
-    equal the single-pass answer — the contract the skew/streaming
-    paths rely on."""
+    equal the single-pass answer — the contract the streaming path
+    relies on."""
     rng = np.random.default_rng(31)
     x = np.round(rng.normal(100, 20, 400), 2)
     x[rng.random(400) < 0.2] = np.nan
     y = np.round(rng.normal(50, 10, 400), 2)
     bounds = [0, *splits, 400]
-    for fn, args, atol in (
-        (K.online_sum, (), 1e-9),
-        (K.online_var, (), 1e-9),
-        (K.online_quantile, (0.5,), 0.0),
+    for kernel, cols, kw, atol in (
+        (K.conv_sum, [x], {}, 1e-9),
+        (K.conv_var, [x], {}, 0.0),
+        (K.conv_quantile, [x], {"p": 0.5}, 0.0),
+        (K.conv_cov, [x, y], {}, 0.0),
     ):
+        min_obs = 2 if kernel is K.conv_cov else 1
         for width in (3, 10, 64):
-            whole, _ = fn(x, width, *args, min_obs=1)
-            st, parts = None, []
-            for lo, hi in zip(bounds, bounds[1:]):
-                seg, st = fn(x[lo:hi], width, *args, min_obs=1, state=st)
-                parts.append(seg)
-            assert _same(whole, np.concatenate(parts), atol=atol), (fn.__name__, width)
-    for width in (3, 10, 64):
-        whole, _ = K.online_cov(x, y, width, min_obs=2)
-        st, parts = None, []
-        for lo, hi in zip(bounds, bounds[1:]):
-            seg, st = K.online_cov(x[lo:hi], y[lo:hi], width, min_obs=2, state=st)
-            parts.append(seg)
-        assert _same(whole, np.concatenate(parts), atol=1e-9), width
+            whole = kernel(*cols, width, min_obs=min_obs, **kw)
+            got = _fold(kernel, cols, width, bounds, min_obs=min_obs, **kw)
+            assert _same(whole, got, atol=atol), (kernel.__name__, width)
+
+
+# every window op with its input columns (cov is bivariate)
+_WINDOW_OPS = (
+    (K.conv_mean, 1, {}), (K.conv_sum, 1, {}), (K.conv_var, 1, {}),
+    (K.conv_scale, 1, {}), (K.conv_quantile, 1, {"p": 0.5}),
+    (K.conv_cov, 2, {}), (K.conv_min, 1, {}), (K.conv_max, 1, {}),
+    (K.conv_nanprod, 1, {}), (K.conv_idxmin, 1, {}), (K.conv_idxmax, 1, {}),
+)
+# convolution sums: last-bit differences allowed (see module docstring)
+_ATOL = {K.conv_mean: 1e-9, K.conv_sum: 1e-9}
 
 
 def test_online_minmax_mismatched_carry_recovers():
-    """A restored state hist that is LONGER than width-1 (stream resumed
-    with a smaller width than the checkpointed one) must truncate to the
-    trailing values, not raise from a negative-size np.full; a SHORT
-    carry still left-pads with NaN (round-4 ADVICE item)."""
+    """A restored tail LONGER than width-1 (stream resumed with a smaller
+    width than the checkpointed one) resumes exactly from its trailing
+    width-1 values, for every window op; a SHORT tail that still holds
+    every row of a young series is NaN-padded on the left."""
     x = np.array([5.0, 1.0, 9.0])
-    # long carry: width=3 needs hist size 2, give it 5 trailing values
-    long_state = {"hist": [100.0, -7.0, 2.0, 8.0, 4.0], "n_obs": 5}
-    out, st = K.online_minmax(x, 3, mode="min", min_obs=1, state=long_state)
+    # long carry: width=3 needs 2 tail values, give it 5
+    long_state = {"tail": [100.0, -7.0, 2.0, 8.0, 4.0], "rows": 5}
+    out, st = K.carry_step(K.conv_min, [x], 3, long_state, min_obs=1)
     # trailing width-1 = [8.0, 4.0] is the effective carry
     assert out.tolist() == [4.0, 1.0, 1.0]
-    assert st["hist"] == [1.0, 9.0]
-    out_max, _ = K.online_minmax(x, 3, mode="max", min_obs=1,
-                                 state={"hist": [8.0, 4.0, 2.0], "n_obs": 3})
+    assert st["tail"].ravel().tolist() == [1.0, 9.0]
+    assert st["rows"] == 8
+    out_max, _ = K.carry_step(K.conv_max, [x], 3,
+                              {"tail": [8.0, 4.0, 2.0], "rows": 3}, min_obs=1)
     assert out_max.tolist() == [5.0, 5.0, 9.0]
-    # short carry unchanged: NaN-padded on the left
-    out_s, _ = K.online_minmax(x, 4, mode="min", min_obs=1,
-                               state={"hist": [2.0], "n_obs": 1})
+    # short carry covering the whole (1-row) series: NaN-padded
+    out_s, _ = K.carry_step(K.conv_min, [x], 4, {"tail": [2.0], "rows": 1},
+                            min_obs=1)
     assert out_s.tolist() == [2.0, 1.0, 1.0]
 
+    rng = np.random.default_rng(23)
+    series = np.round(rng.normal(10, 3, (2, 60)), 2)
+    series[:, rng.random(60) < 0.2] = np.nan
+    for kernel, ncols, kw in _WINDOW_OPS:
+        cols = list(series[:ncols])
+        # 40 rows at width 9 (tail 8), resumed at width 4 (tail 3)
+        _, st = K.carry_step(kernel, [c[:40] for c in cols], 9, None,
+                             min_obs=1, **kw)
+        got, _ = K.carry_step(kernel, [c[40:] for c in cols], 4, st,
+                              min_obs=1, **kw)
+        want = kernel(*cols, 4, min_obs=1, **kw)[40:]
+        assert _same(got, want, _ATOL.get(kernel, 0.0)), kernel.__name__
+        # 1 row at width 2 (tail 1) resumes at width 5: the tail still
+        # holds the whole series
+        _, st = K.carry_step(kernel, [c[:1] for c in cols], 2, None,
+                             min_obs=1, **kw)
+        got, _ = K.carry_step(kernel, [c[1:] for c in cols], 5, st,
+                              min_obs=1, **kw)
+        want = kernel(*cols, 5, min_obs=1, **kw)[1:]
+        assert _same(got, want, _ATOL.get(kernel, 0.0)), kernel.__name__
 
-def test_online_width_shrink_raises():
-    """Resuming a sum/moment/multiset kernel with a SMALLER width than
-    its checkpointed state must raise loudly — the carried running sums
-    are tied to the old width, so silent continuation would be wrong
-    (online_minmax alone can truncate-and-recover: raw-value carry)."""
+
+def test_online_width_growth_raises():
+    """Resuming with a LARGER width than the checkpointed tail covers
+    must raise: the tail lost rows the wider windows need, so silent
+    continuation would emit wrong values."""
     x = np.arange(20.0)
-    for fn, args in ((K.online_mean, ()), (K.online_sum, ()),
-                     (K.online_var, ()), (K.online_quantile, (0.5,))):
-        _, st = fn(x, 5, *args, min_obs=1)
+    for kernel, ncols, kw in _WINDOW_OPS:
+        cols = [x] * ncols
+        _, st = K.carry_step(kernel, cols, 5, None, min_obs=1, **kw)
         with pytest.raises(ValueError, match="state width mismatch"):
-            fn(x, 3, *args, min_obs=1, state=st)
-    _, st = K.online_cov(x, x * 2, 5, min_obs=2)
+            K.carry_step(kernel, cols, 8, st, min_obs=1, **kw)
+    _, st = K.online_var(x, 5, min_obs=2)
     with pytest.raises(ValueError, match="state width mismatch"):
-        K.online_cov(x, x * 2, 3, min_obs=2, state=st)
+        K.online_var(x, 6, min_obs=2, state=st)
 
 
 def test_online_idxminmax_matches_batch_contract():
-    """online_idxminmax == an independent naive replay of the batch
-    contract (window_ops._idx_extreme / roll_vec.h:1345-1659): series
-    position while expanding, window slot once rolling, most-recent
-    ties, NaN exclusion, min_obs gating — plus chunked state carry
-    (hist + global row count) equals the single pass."""
+    """conv_idxmin/conv_idxmax == an independent naive replay of the
+    batch contract (window_ops._idx_extreme / roll_vec.h:1345-1659):
+    series position while expanding, window slot once rolling,
+    most-recent ties, NaN exclusion, min_obs gating — plus the chunked
+    fold (tail + series row count) equals the single pass."""
     rng = np.random.default_rng(7)
     x = np.round(rng.normal(50, 20, 200), 2)
     x[rng.random(200) < 0.15] = np.nan
@@ -170,26 +212,22 @@ def test_online_idxminmax_matches_batch_contract():
             out[i] = r_ext if r <= width else width - r + r_ext
         return out
 
-    for mode in ("min", "max"):
+    for mode, kernel in (("min", K.conv_idxmin), ("max", K.conv_idxmax)):
         for width in (1, 3, 10):
             for mo in (1, 3):
                 want = naive(x, width, mode, mo)
-                got, _ = K.online_idxminmax(x, width, mode=mode, min_obs=mo)
+                got = kernel(x, width, min_obs=mo)
                 assert _same(got, want), (mode, width, mo)
-                st, parts = None, []
-                for lo, hi in ((0, 13), (13, 14), (14, 90), (90, 200)):
-                    seg, st = K.online_idxminmax(
-                        x[lo:hi], width, mode=mode, min_obs=mo, state=st)
-                    parts.append(seg)
-                assert _same(np.concatenate(parts), want), (mode, width, mo)
+                got = _fold(kernel, [x], width, (0, 13, 14, 90, 200), min_obs=mo)
+                assert _same(got, want), (mode, width, mo)
 
 
 def test_online_scale_matches_naive():
-    """online_scale == a naive two-pass z-score replay of the batch
+    """conv_scale == a naive two-pass z-score replay of the batch
     roll_scale contract (most-recent-non-NA value, n_obs>1 + var>eps
-    emission, min_obs gate), within the online-vs-two-pass ~kappa*eps
-    class the var/cov twins document (5e-8 band); chunked state carry
-    equals the single pass exactly."""
+    emission, min_obs gate), within float noise of the different
+    summation order (5e-8 band); the chunked fold equals the single
+    pass exactly."""
     rng = np.random.default_rng(3)
     x = np.round(rng.normal(50, 20, 300), 2)
     x[rng.random(300) < 0.2] = np.nan
@@ -210,21 +248,17 @@ def test_online_scale_matches_naive():
     for width in (2, 5, 10, 30):
         for mo in (1, 5):
             want = naive(x, width, mo)
-            got, _ = K.online_scale(x, width, min_obs=mo)
+            got = K.conv_scale(x, width, min_obs=mo)
             assert np.array_equal(np.isnan(got), np.isnan(want)), (width, mo)
             m = ~np.isnan(got)
             assert np.allclose(got[m], want[m], rtol=0, atol=5e-8), (width, mo)
-            st, parts = None, []
-            for lo, hi in ((0, 17), (17, 18), (18, 150), (150, 300)):
-                seg, st = K.online_scale(x[lo:hi], width, min_obs=mo, state=st)
-                parts.append(seg)
-            g2 = np.concatenate(parts)
+            g2 = _fold(K.conv_scale, [x], width, (0, 17, 18, 150, 300), min_obs=mo)
             assert np.array_equal(g2, got, equal_nan=True), (width, mo)
 
 
 def test_online_prod_matches_naive():
-    """online_prod == the naive per-window product (exact zeros/signs,
-    NaN exclusion, min_obs gate); chunked carry == single pass."""
+    """conv_nanprod == the naive per-window product (exact zeros/signs,
+    NaN exclusion, min_obs gate); chunked fold == single pass."""
     rng = np.random.default_rng(11)
     x = np.round(rng.normal(0.0, 1.5, 250), 2)  # mixed signs
     x[rng.random(250) < 0.2] = np.nan
@@ -242,11 +276,7 @@ def test_online_prod_matches_naive():
     for width in (1, 4, 10):
         for mo in (1, 4):
             want = naive(x, width, mo)
-            got, _ = K.online_prod(x, width, min_obs=mo)
+            got = K.conv_nanprod(x, width, min_obs=mo)
             assert _same(got, want), (width, mo)
-            st, parts = None, []
-            for lo, hi in ((0, 41), (41, 42), (42, 130), (130, 250)):
-                seg, st = K.online_prod(x[lo:hi], width, min_obs=mo, state=st)
-                parts.append(seg)
-            assert np.array_equal(np.concatenate(parts), got,
-                                  equal_nan=True), (width, mo)
+            g2 = _fold(K.conv_nanprod, [x], width, (0, 41, 42, 130, 250), min_obs=mo)
+            assert np.array_equal(g2, got, equal_nan=True), (width, mo)

@@ -365,3 +365,22 @@ def test_store_expire_retention(spark, raw_dir, tmp_path):
     assert not os.path.exists(ghost)
     # idempotent: nothing older than cutoff remains
     assert store.expire(cutoff, coverage=cov) == []
+
+
+def test_store_expire_rejects_noncanonical_cutoff(spark, tmp_path):
+    """expire() compares day names as strings, so a non-canonical cutoff
+    like '2024-1-5' sorts after every '2024-01-*' day and would drop
+    them all. The cutoff is normalized through date.fromisoformat: a
+    malformed one raises before anything is dropped."""
+    import os
+
+    store_path = tmp_path / "tier_cutoff"
+    days = ["2024-01-04", "2024-01-05", "2024-01-20"]
+    for d in days:
+        os.makedirs(store_path / f"_day={d}")
+    store = TierStore(spark, str(store_path), "conv_id", "1m")
+    with pytest.raises(ValueError):
+        store.expire("2024-1-5")
+    assert sorted(os.listdir(store_path)) == [f"_day={d}" for d in days]
+    assert store.expire("2024-01-05") == ["2024-01-04"]
+    assert sorted(os.listdir(store_path)) == [f"_day={d}" for d in days[1:]]

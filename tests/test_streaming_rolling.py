@@ -1,8 +1,8 @@
 """Stateful streaming rolling stats must equal the batch kernels row for
-row: the state store carries each series' window across micro-batches,
-so an incrementally-delivered transcript yields EXACTLY the numbers a
-cold batch pass produces (online == offline, extended to the streaming
-runtime)."""
+row: the state store carries each series' raw window tail across
+micro-batches, and each batch runs the batch kernel over tail + batch,
+so an incrementally-delivered transcript yields the numbers a cold
+batch pass produces."""
 
 from __future__ import annotations
 
@@ -91,36 +91,85 @@ def test_stream_roll_equals_batch(spark, ordered_stream_dir, tmp_path, op, kw):
            .sort_values(["conv_id", order_col]).reset_index(drop=True))
     assert len(got) == N_CONVS * N_TURNS
 
-    kernel = {"mean": K.online_mean, "sum": K.online_sum,
-              "var": K.online_var, "prod": K.online_prod}.get(op)
     for c in range(N_CONVS):
         sub = pdf[pdf.conv_id == f"c{c}"].sort_values("turn_idx")
         series = sub["text_len"].to_numpy(dtype=np.float64)
-        if op in ("min", "max"):
-            want, _ = K.online_minmax(series, WIDTH, mode=op, min_obs=2)
-        elif op in ("idxmin", "idxmax"):
-            # the kernel itself is verified against the batch contract in
-            # test_online.py; here the axis under test is the micro-batch
-            # state carry (hist + global row count)
-            want, _ = K.online_idxminmax(series, WIDTH, mode=op[3:], min_obs=2)
-        elif op == "scale":
-            # kernel verified vs the naive z-score contract in
-            # test_online.py; this checks the micro-batch state carry
-            want, _ = K.online_scale(series, WIDTH, min_obs=2)
-        elif op == "quantile":
-            want = K.conv_quantile(series, WIDTH, 0.5, min_obs=2)
-        elif op == "ewma":
-            t_us = np.round(sub["ts_s"].to_numpy(dtype=np.float64) * 1e6).astype(np.int64)
-            want = K.conv_ewma_time(series, t_us, 6 * 3600.0, min_obs=2)
-        elif op == "cov":
-            yv = sub["lat"].to_numpy(dtype=np.float64)
-            want, _ = K.online_cov(series, yv, WIDTH, min_obs=2)
-        else:
-            want, _ = kernel(series, WIDTH, min_obs=2)
+        want = _batch_want(op, sub, series, min_obs=2, **kw)
         g = got[got.conv_id == f"c{c}"]["r"].to_numpy(dtype=np.float64)
         same = (g == want) | (np.isnan(g) & np.isnan(want))
-        ok = same | np.isclose(g, want, rtol=0, atol=1e-9)
-        assert ok.all(), (op, c, np.where(~ok)[0][:5])
+        if op in _CONV_SUM_OPS:
+            same |= np.isclose(g, want, rtol=0, atol=1e-9)
+        assert same.all(), (op, c, np.where(~same)[0][:5])
+
+
+# mean/sum sum by np.convolve, whose summation order follows memory
+# alignment, and ewma rebases its decay scan at every batch: these may
+# differ from the whole-series value in the last bits; every other op
+# must match exactly
+_CONV_SUM_OPS = ("mean", "sum", "ewma")
+
+
+def _batch_want(op, sub, series, *, min_obs, p=0.5, y=None, halflife_s=None):
+    """The whole-series batch kernel for ``op`` over one conversation."""
+    if op == "ewma":
+        t_us = np.round(sub["ts_s"].to_numpy(dtype=np.float64) * 1e6).astype(np.int64)
+        return K.conv_ewma_time(series, t_us, halflife_s, min_obs=min_obs)
+    if op == "cov":
+        yv = sub[y].to_numpy(dtype=np.float64)
+        return K.conv_cov(series, yv, WIDTH, min_obs=min_obs)
+    if op == "quantile":
+        return K.conv_quantile(series, WIDTH, p, min_obs=min_obs)
+    kernel = {"mean": K.conv_mean, "sum": K.conv_sum, "var": K.conv_var,
+              "min": K.conv_min, "max": K.conv_max, "prod": K.conv_nanprod,
+              "idxmin": K.conv_idxmin, "idxmax": K.conv_idxmax,
+              "scale": K.conv_scale}[op]
+    return kernel(series, WIDTH, min_obs=min_obs)
+
+
+@pytest.mark.parametrize("op,kw", [
+    ("var", {}),
+    ("quantile", {"p": 0.5}),
+    ("cov", {"y": "lat"}),
+    ("idxmax", {}),
+])
+def test_stream_roll_checkpoint_resume(spark, ordered_stream_dir, tmp_path, op, kw):
+    """Crash/resume seam: drain file 1 to a parquet sink, stop, then
+    restart the query on the SAME checkpoint after files 2-3 land. The
+    second run starts from the state-store copy of each series' tail,
+    and the union of both runs' output equals the batch kernel."""
+    from roll_spark.streaming.rolling import stream_roll
+
+    src, pdf = ordered_stream_dir
+    live = tmp_path / "live"
+    os.makedirs(live)
+    sink, ck = str(tmp_path / "sink"), str(tmp_path / "ck")
+
+    def drain(files):
+        for f in files:
+            shutil.copy(os.path.join(src, f), live / f)
+            os.utime(live / f, os.stat(os.path.join(src, f))[7:9])
+        sdf = spark.readStream.schema(
+            "conv_id string, turn_idx long, ts_s double, text_len double, lat double"
+        ).option("maxFilesPerTrigger", 1).parquet(str(live))
+        out = stream_roll(sdf, "text_len", "conv_id", "turn_idx", WIDTH,
+                          op=op, min_obs=2, out="r", **kw)
+        q = (out.writeStream.format("parquet").outputMode("append")
+             .option("path", sink).option("checkpointLocation", ck)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        q.stop()
+        return spark.read.parquet(sink).count()
+
+    assert drain(["turns_0.parquet"]) == N_CONVS * 30
+    assert drain(["turns_1.parquet", "turns_2.parquet"]) == N_CONVS * N_TURNS
+    got = (spark.read.parquet(sink).toPandas()
+           .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    for c in range(N_CONVS):
+        sub = pdf[pdf.conv_id == f"c{c}"].sort_values("turn_idx")
+        series = sub["text_len"].to_numpy(dtype=np.float64)
+        want = _batch_want(op, sub, series, min_obs=2, **kw)
+        g = got[got.conv_id == f"c{c}"]["r"].to_numpy(dtype=np.float64)
+        assert np.array_equal(g, want, equal_nan=True), (op, c)
 
 
 def test_stream_sessionize_equals_batch(spark, tmp_path):
@@ -194,3 +243,6 @@ def test_numeric_order_seconds_guard():
     micros = pd.Series([1.7e15, 1.7e15 + 1e6])  # epoch-µs smell
     with _pt.raises(ValueError, match="epoch-SECONDS"):
         _numeric_order_to_us(micros)
+    # a NaN order value would pass a NaN-skipping max and cast to int64 min
+    with _pt.raises(ValueError, match="NaN"):
+        _numeric_order_to_us(pd.Series([1.0, np.nan, 2.0]))
