@@ -7,8 +7,8 @@ Re-expresses the query surface of the R package ``roll`` (reference:
 - equal-weight rolling/expanding statistics -> native Catalyst Window
   expressions (``roll_spark.operators.window_ops``), whole-stage codegen'd;
 - weighted / exponential-decay / exact-quantile / k-regressor paths ->
-  vectorized Arrow kernels over ``applyInPandas``
-  (``roll_spark.operators.arrow_ops`` + ``roll_spark.operators.kernels``);
+  vectorized numpy kernels over ``applyInArrow``, one call per series
+  bucket (``roll_spark.operators.arrow_ops`` + ``roll_spark.operators.kernels``);
 - retention tiers raw->1m->1h->1d with mergeable sufficient statistics
   (Chan et al. parallel moment combination), gap-fill, Gorilla compression,
   and resumable per-partition lineage (``roll_spark.plans``);
@@ -105,4 +105,4 @@ __all__ = [
     "roll_time",
 ]
 
-__version__ = "0.5.0"
+__version__ = "0.6.0"

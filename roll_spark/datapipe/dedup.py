@@ -13,6 +13,7 @@ the join key carries the blocking.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -156,14 +157,15 @@ def _register_fp_cache(new_df) -> None:
     # issuing the next winnow call on a DIFFERENT corpus, or the eager
     # eviction here forces the first corpus's 3-consumer fingerprint
     # subtree to recompute (perf only, never correctness). unpersist() on
-    # a handle from a stopped SparkSession throws — swallow it, the cache
-    # died with the session anyway.
+    # a handle from a stopped SparkSession throws — swallow only that, the
+    # cache died with the session anyway. A sameSemantics failure raises:
+    # the old handle stays registered, so release_caches() can still drop it.
     for old in _live_fp_cache:
-        try:
-            if not old.sameSemantics(new_df):
+        if not old.sameSemantics(new_df):
+            try:
                 old.unpersist()
-        except Exception:
-            pass
+            except Py4JError:
+                pass
     _live_fp_cache[:] = [new_df]
 
 

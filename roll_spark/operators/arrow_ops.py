@@ -1,38 +1,42 @@
-"""Arrow (applyInPandas) execution of the roll_* surface — the scale
+"""Arrow (applyInArrow) execution of the roll_* surface — the scale
 path for weighted / exponential-decay inputs, exact quantiles at large
 widths, and k-regressor roll_lm.
 
-Physical shape: one hash exchange on the series key, then a grouped-map
-Pandas UDF per series running the vectorized numpy kernels of
-roll_spark.operators.kernels — exactly the reference's parallelization
-model (one task per independent series, sequential in time;
-src/roll.cpp:384) with Arrow batches instead of RcppParallel threads.
-Per-row Python never happens: each group crosses the JVM<->Python
-boundary once as a columnar batch.
+Physical shape: one hash exchange on a series BUCKET,
+``pmod(xxhash64(*by), n)`` with n = ``spark.sql.shuffle.partitions``,
+then one grouped-map Arrow UDF call per bucket. Each call stable-sorts
+its bucket once on (by, order), walks the series segments and runs the
+vectorized numpy kernel of roll_spark.operators.kernels once per
+series — the reference's per-series loop (src/roll.cpp:384) with the
+Python dispatch paid per bucket, not per series. Per-row Python never
+happens, and pandas is not on the path: columns cross the JVM<->Python
+boundary as Arrow and leave it as Arrow built from numpy.
 
-Skewed series (one conversation with 10^9 turns) do NOT fit this model;
-they go through roll_spark.operators.chunked which splits a series into
-overlap-padded chunks that this module's kernels evaluate independently.
+Memory: one call holds one bucket, about one shuffle partition of the
+input, in Python memory. A skewed series (one conversation with 10^9
+turns) still pins its bucket; it goes through
+roll_spark.operators.chunked, which splits a series into overlap-padded
+chunks that this module's kernels evaluate independently.
 
 DATA CONTRACT (all roll_* entry points, both paths): the (by, order)
 key tuple — e.g. (conv_id, turn_idx) / (user_id, ts) — must be UNIQUE
 and NON-NULL per row. The wide-frame join-back rejoins kernel outputs
-on exactly these keys: a NULL order key never matches (its outputs
-silently become NULL) and duplicate keys fan out. Set
-ROLL_SPARK_DEBUG_KEYS=1 to fail loudly instead: the join-back then
-asserts key uniqueness/non-nullness per group before joining.
+on exactly these keys, where a NULL order key would never match (its
+outputs silently NULL) and duplicate keys would fan out; the join-back
+therefore checks both on every sorted bucket and raises ValueError.
 """
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Sequence
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TT
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from roll_spark.config import RollSpec
 from roll_spark.operators import kernels as K
@@ -41,14 +45,82 @@ from roll_spark.operators.base import Cols, _as_list
 _WIDE_TYPES = (TT.StringType, TT.BinaryType)
 
 
-def _nan_to_none_rows(mat):
-    """(n, k) float matrix -> list of array<double> cells (all-NaN row
-    -> NULL array, NaN element -> NULL element)."""
-    return [
-        None if np.isnan(row).all()
-        else [None if np.isnan(v) else float(v) for v in row]
-        for row in mat
-    ]
+def _same_as_prev(t: pa.Table, cols: list[str]) -> np.ndarray:
+    """Row i+1 equals row i on every column of ``cols`` (length n-1) of
+    a single-chunk table; NULL equals NULL, as in groupBy."""
+    same = np.ones(t.num_rows - 1, dtype=bool)
+    for c in cols:
+        enc = pc.dictionary_encode(t.column(c), null_encoding="encode")
+        k = enc.chunk(0).indices.to_numpy()
+        same &= k[1:] == k[:-1]
+    return same
+
+
+def _as_numpy(col) -> np.ndarray:
+    """Kernel input: numeric columns as float64 with NaN for NULL, other
+    types (entropy's strings, timestamps) as numpy objects/NaT."""
+    a = col.to_numpy()
+    t = col.type
+    if pa.types.is_integer(t) or pa.types.is_floating(t) or \
+            pa.types.is_decimal(t) or pa.types.is_boolean(t):
+        return a.astype(np.float64)
+    return a
+
+
+def _to_arrow(a: np.ndarray) -> pa.Array:
+    """Kernel output -> Arrow. 1-D: double, NaN -> NULL. 2-D (n, k):
+    array<double> rows, an all-NaN row -> NULL array, a NaN element ->
+    NULL element."""
+    nan = np.isnan(a)
+    if a.ndim == 1:
+        return pa.array(a, mask=nan)
+    n, k = a.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * k + 1, k, dtype=np.int32)),
+        pa.array(a.ravel(), mask=nan.ravel()),
+        mask=pa.array(nan.all(axis=1)),
+    )
+
+
+def _bucket_fn(by_l, order_l, in_cols, keep, out_fields, kernel, schema,
+               check_keys):
+    """The per-bucket UDF: sort once, run ``kernel`` per series segment,
+    return ``keep`` columns + outputs as an Arrow table of ``schema``."""
+    arrow_schema = to_arrow_schema(schema)
+    sort_keys = [(c, "ascending") for c in by_l + order_l]
+
+    def fn(table: pa.Table) -> pa.Table:
+        t = table.take(pc.sort_indices(table, sort_keys=sort_keys)).combine_chunks()
+        n = t.num_rows
+        same = _same_as_prev(t, by_l)
+        if check_keys:
+            if any(t.column(c).null_count for c in order_l):
+                raise ValueError(
+                    "roll_spark data contract violated: NULL order key in "
+                    f"series group (order cols {order_l}); NULL keys "
+                    "never match the join-back and would silently NULL "
+                    "their kernel outputs"
+                )
+            if (same & _same_as_prev(t, order_l)).any():
+                raise ValueError(
+                    "roll_spark data contract violated: duplicate "
+                    f"(by, order) key in series group (order cols "
+                    f"{order_l}); duplicates fan out in the join-back"
+                )
+        cuts = np.flatnonzero(~same) + 1
+        full = {c: _as_numpy(t.column(c)) for c in in_cols}
+        outs: dict[str, np.ndarray] = {}
+        for s, e in zip(np.append(0, cuts), np.append(cuts, n)):
+            res = kernel({c: a[s:e].copy() for c, a in full.items()})
+            for name, v in res.items():
+                if name not in outs:
+                    outs[name] = np.empty((n,) + np.shape(v)[1:])
+                outs[name][s:e] = v
+        arrays = [t.column(c) for c in keep] + [_to_arrow(outs[o]) for o, _ in out_fields]
+        names = keep + [o for o, _ in out_fields]
+        return pa.Table.from_arrays(arrays, names=names).cast(arrow_schema)
+
+    return fn
 
 
 def _apply_kernel(
@@ -60,17 +132,31 @@ def _apply_kernel(
     kernel,
     spec: RollSpec | None = None,
 ) -> DataFrame:
-    """Run ``kernel(pdf) -> dict[out_col, np.ndarray]`` per series group.
+    """Run ``kernel(cols) -> dict[out_col, np.ndarray]`` once per series.
+
+    ``cols`` maps each of ``in_cols`` to one series' values in order
+    (see ``_as_numpy``); a 1-D output becomes a ``double`` column, an
+    (n, k) output an ``array<double>`` column.
+
+    Grouping: rows are grouped by the series bucket
+    ``pmod(xxhash64(*by), spark.sql.shuffle.partitions)``, so a pass
+    makes one applyInArrow call per non-empty bucket rather than one
+    per series, and a call holds its whole bucket — about one shuffle
+    partition, not one series — in Python memory. Inside a call the bucket is stable-sorted on
+    (by, order) with ``pyarrow.compute.sort_indices`` (string keys,
+    timestamps and NULLs included) and the kernel runs on a fresh
+    contiguous copy of each series segment — the same input array a
+    one-series-per-call executor would hand it, hence the same outputs.
 
     Skew auto-dispatch: when ``spec.max_group_rows`` is set, EVERY
     series is routed through the overlap-padded chunk layout
     (operators.chunked) with that bound as the chunk size — a series
     at or under the bound lands entirely in chunk 0 with zero pad rows
     (only its grouping key widens), while a 10^9-turn conversation
-    becomes ceil(n / bound) independent tasks whose padded windows
-    reproduce the unchunked outputs exactly. The cost of the guard is
-    one extra row_number window pass + grouping on (series, chunk)
-    instead of (series).
+    becomes ceil(n / bound) segments, hashed to buckets independently,
+    whose padded windows reproduce the unchunked outputs exactly. The
+    cost of the guard is one extra row_number window pass + keying on
+    (series, chunk) instead of (series).
 
     Two physical strategies:
 
@@ -83,8 +169,10 @@ def _apply_kernel(
       back on the (by, order) key columns so megabyte text/binary
       payloads never serialize through Arrow twice. This relies on the
       engine's data contract — (series key, order key) uniquely
-      identifies a row, e.g. (conv_id, turn_idx) — and is deterministic
-      under recomputation, unlike a synthetic monotonically_increasing_id
+      identifies a row, e.g. (conv_id, turn_idx) — which every bucket
+      checks on its sorted keys (a NULL order key or an adjacent equal
+      (by, order) pair raises ValueError). It is deterministic under
+      recomputation, unlike a synthetic monotonically_increasing_id
       (whose values are partition-layout-dependent: the two sides of the
       self-join may recompute the upstream plan with different physical
       layouts and disagree on every id).
@@ -103,67 +191,32 @@ def _apply_kernel(
         for f in df.schema
         if f.name not in key_cols and isinstance(f.dataType, _WIDE_TYPES)
     ]
-    order_cols = list(order_l)
+    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bucket = [F.pmod(F.xxhash64(*by_l), F.lit(n_buckets))] if by_l else []
+    outs = [TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields]
 
     if not wide:
-        out_schema = TT.StructType(
-            list(df.schema)
-            + [TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields]
-        )
-
-        def fn_pass(pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values(order_cols, kind="stable")
-            res = kernel(pdf)
-            return pdf.assign(**res)
-
-        return df.groupBy(*by_l).applyInPandas(fn_pass, schema=out_schema)
+        schema = TT.StructType(list(df.schema) + outs)
+        fn = _bucket_fn(by_l, order_l, in_cols, df.columns, out_fields,
+                        kernel, schema, check_keys=False)
+        return df.groupBy(*bucket).applyInArrow(fn, schema=schema)
 
     field_by_name = {f.name: f for f in df.schema}
-    slim = df.select(*by_l, *order_l, *in_cols)
-    out_schema = TT.StructType(
-        [field_by_name[c] for c in by_l + order_l]
-        + [TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields]
-    )
-
-    debug_keys = os.environ.get("ROLL_SPARK_DEBUG_KEYS") == "1"
-
-    def fn(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(order_cols, kind="stable")
-        if debug_keys:
-            keys = pdf[order_cols]
-            if keys.isna().any().any():
-                raise ValueError(
-                    "roll_spark data contract violated: NULL order key in "
-                    f"series group (order cols {order_cols}); NULL keys "
-                    "never match the join-back and would silently NULL "
-                    "their kernel outputs"
-                )
-            if keys.duplicated().any():
-                raise ValueError(
-                    "roll_spark data contract violated: duplicate "
-                    f"(by, order) key in series group (order cols "
-                    f"{order_cols}); duplicates fan out in the join-back"
-                )
-        res = kernel(pdf)
-        data = {c: pdf[c].to_numpy() for c in by_l + order_l}
-        data.update(res)
-        return pd.DataFrame(data)
-
-    res = slim.groupBy(*by_l).applyInPandas(fn, schema=out_schema)
-    return df.join(res, on=by_l + order_l, how="left")
+    keys = by_l + order_l
+    slim = df.select(*keys, *in_cols)
+    schema = TT.StructType([field_by_name[c] for c in keys] + outs)
+    fn = _bucket_fn(by_l, order_l, in_cols, keys, out_fields, kernel, schema,
+                    check_keys=True)
+    res = slim.groupBy(*bucket).applyInArrow(fn, schema=schema)
+    return df.join(res, on=keys, how="left")
 
 
 def _series_kernel_1(value: str, spec: RollSpec, fn, out: str, **kw):
     weights = None if spec.weights is None else np.asarray(spec.weights)
 
-    def kernel(pdf):
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
         arr = fn(
-            x,
+            cols[value],
             spec.width,
             weights=weights,
             min_obs=spec.effective_min_obs,
@@ -178,11 +231,9 @@ def _series_kernel_1(value: str, spec: RollSpec, fn, out: str, **kw):
 def _series_kernel_2(x_col: str, y_col: str, spec: RollSpec, fn, out: str, **kw):
     weights = None if spec.weights is None else np.asarray(spec.weights)
 
-    def kernel(pdf):
-        x = pdf[x_col].to_numpy(dtype=np.float64, na_value=np.nan)
-        y = pdf[y_col].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
         arr = fn(
-            x, y,
+            cols[x_col], cols[y_col],
             spec.width,
             weights=weights,
             min_obs=spec.effective_min_obs,
@@ -239,10 +290,9 @@ def roll_quantiles(df, value, by, order, spec: RollSpec, ps, outs):
     weights = None if spec.weights is None else np.asarray(spec.weights)
     ps = list(ps)
 
-    def kernel(pdf):
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
         arr = K.conv_quantiles(
-            x, spec.width, ps, weights=weights,
+            cols[value], spec.width, ps, weights=weights,
             min_obs=spec.effective_min_obs, na_restore=spec.na_restore,
         )
         return {o: arr[:, j] for j, o in enumerate(outs)}
@@ -306,19 +356,16 @@ def roll_lm_k(
     if intercept:
         fields += [(p + "intercept", "double"), (p + "se_intercept", "double")]
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
-        yv = pdf[y].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
         res = K.conv_lm_k(
-            X, yv, spec.width, weights=weights,
+            X, cols[y], spec.width, weights=weights,
             min_obs=spec.effective_min_obs, intercept=intercept,
         )
         out = {
-            p + "coef": _nan_to_none_rows(res["coef"]),
+            p + "coef": res["coef"],
             p + "r2": res["r2"],
-            p + "se": _nan_to_none_rows(res["se"]),
+            p + "se": res["se"],
         }
         if intercept:
             out[p + "intercept"] = res["intercept"]
@@ -378,20 +425,17 @@ def roll_lm_multi(
                 (f"{p}{yc}_se_intercept", "double"),
             ]
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
         out = {}
         for yc in y_cols:
-            yv = pdf[yc].to_numpy(dtype=np.float64, na_value=np.nan)
             res = K.conv_lm_k(
-                X, yv, spec.width, weights=weights,
+                X, cols[yc], spec.width, weights=weights,
                 min_obs=spec.effective_min_obs, intercept=intercept,
             )
-            out[f"{p}{yc}_coef"] = _nan_to_none_rows(res["coef"])
+            out[f"{p}{yc}_coef"] = res["coef"]
             out[f"{p}{yc}_r2"] = res["r2"]
-            out[f"{p}{yc}_se"] = _nan_to_none_rows(res["se"])
+            out[f"{p}{yc}_se"] = res["se"]
             if intercept:
                 out[f"{p}{yc}_intercept"] = res["intercept"]
                 out[f"{p}{yc}_se_intercept"] = res["se_intercept"]
@@ -421,18 +465,14 @@ def roll_cov_xy_matrix(
     x_cols = list(x_cols)
     y_cols = list(y_cols)
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
-        Y = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in y_cols]
-        )
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
+        Y = np.column_stack([cols[c] for c in y_cols])
         cube = K.conv_cov_xy_matrix(
             X, Y, spec.width, weights=weights, min_obs=spec.effective_min_obs,
             center=spec.center, complete_obs=complete_obs,
         ).reshape(len(X), -1)
-        return {out: [[None if np.isnan(v) else float(v) for v in row] for row in cube]}
+        return {out: cube}
 
     return _apply_kernel(df, x_cols + y_cols, by, order, [(out, "array<double>")], kernel, spec=spec)
 
@@ -460,15 +500,13 @@ def roll_cov_matrix(
     weights = None if spec.weights is None else np.asarray(spec.weights)
     x_cols = list(x_cols)
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
         cube = K.conv_cov_matrix(
             X, spec.width, weights=weights, min_obs=spec.effective_min_obs,
             center=spec.center, scale=scale, complete_obs=complete_obs,
         ).reshape(len(X), -1)
-        return {out: [[None if np.isnan(v) else float(v) for v in row] for row in cube]}
+        return {out: cube}
 
     return _apply_kernel(df, x_cols, by, order, [(out, "array<double>")], kernel, spec=spec)
 
@@ -483,9 +521,8 @@ def roll_mad(df, value, by, order, width, *, min_obs=None, na_restore=False,
     spec = RollSpec(width=width, min_obs=min_obs, na_restore=na_restore,
                     max_group_rows=max_group_rows)
 
-    def kernel(pdf):
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
-        return {out: K.conv_mad(x, width, min_obs=spec.effective_min_obs,
+    def kernel(cols):
+        return {out: K.conv_mad(cols[value], width, min_obs=spec.effective_min_obs,
                                 na_restore=na_restore)}
 
     return _apply_kernel(df, [value], by, order, [(out, "double")], kernel, spec=spec)

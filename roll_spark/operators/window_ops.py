@@ -21,8 +21,8 @@ DATA CONTRACT: every roll_* op requires the (by, order) key tuple —
 e.g. (conv_id, turn_idx) / (user_id, ts) — to be UNIQUE and NON-NULL
 per row. Window ordering over duplicate or NULL order keys is
 ill-defined, and the Arrow path's wide-frame join-back relies on the
-keys to re-align kernel outputs (see roll_spark.operators.arrow_ops;
-ROLL_SPARK_DEBUG_KEYS=1 asserts the contract at runtime).
+keys to re-align kernel outputs (see roll_spark.operators.arrow_ops,
+whose join-back checks the contract on every bucket and raises).
 """
 
 from __future__ import annotations

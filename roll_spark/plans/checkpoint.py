@@ -1,8 +1,11 @@
 """Resumable rollup stages with per-partition lineage + metrics.
 
 Every stage of the tier cascade writes to its own directory with a
-``_lineage.json`` manifest recording, per partition: the stage params
-fingerprint, row count, and a content digest. On resume, a stage whose
+``_lineage.json`` manifest recording the stage params and their
+fingerprint, a ``complete`` flag, the stage metrics (total rows, wall
+seconds) and, for a partitioned stage, the row count of each
+partition. It holds no content digest: resume trusts the fingerprint
+and the flag, it does not re-hash the data. On resume, a stage whose
 manifest is complete and whose fingerprint matches is read back from
 disk instead of recomputed — a kill at ANY point leaves only missing
 or incomplete stages, which re-run idempotently (parquet overwrite is

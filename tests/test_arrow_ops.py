@@ -1,5 +1,5 @@
 """End-to-end Arrow path through the public API: passing non-equal
-weights to any roll_* op must route to the applyInPandas kernels and
+weights to any roll_* op must route to the applyInArrow kernels and
 match the naive oracle — the reference's weighted/exp-decay axis."""
 
 from __future__ import annotations
@@ -87,7 +87,7 @@ def test_weighted_pair_ops_arrow(spark, grid_df, grid_pairs):
 
 
 def test_lm_k2_arrow(spark, grid_df, grid_pairs):
-    """Two-regressor lm through applyInPandas: y ~ x + x^2."""
+    """Two-regressor lm through applyInArrow: y ~ x + x^2."""
     from pyspark.sql import functions as F
 
     df2 = grid_df.withColumn("x2", F.col("x") * F.col("x"))
@@ -204,7 +204,7 @@ def test_cov_matrix_kernel_matches_pairwise_oracle():
 
 
 def test_roll_cov_matrix_spark(spark, grid_df):
-    """End-to-end cube op through applyInPandas: k=2 matrix entries equal
+    """End-to-end cube op through applyInArrow: k=2 matrix entries equal
     the scalar roll_cov/roll_var results under the same masking."""
     from pyspark.sql import functions as F
 
@@ -309,13 +309,13 @@ def test_quantile_width_dispatch(grid_df):
                           QUANTILE_NATIVE_MAX_WIDTH, 0.5, min_obs=1, out="q")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" in plan_small
-    assert "FlatMapGroupsInPandas" not in plan_small
+    assert "FlatMapGroupsInArrow" not in plan_small
 
     big = roll_quantile(grid_df, "x", "series_id", "i",
                         QUANTILE_NATIVE_MAX_WIDTH + 1, 0.5, min_obs=1, out="q")
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" not in plan_big
-    assert "FlatMapGroupsInPandas" in plan_big
+    assert "FlatMapGroupsInArrow" in plan_big
 
 
 def test_quantile_native_equals_arrow_at_boundary_p(grid_df):
@@ -338,3 +338,159 @@ def test_quantile_native_equals_arrow_at_boundary_p(grid_df):
             a, b = got_n[name], got_a[name]
             same = (a == b) | (np.isnan(a) & np.isnan(b))
             assert same.all(), (p, name, np.where(~same)[0][:3])
+
+
+# ---------------------------------------------------------------------------
+# bucketed executor: data-contract checks and segment seams
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("bad", ["NULL order key", "duplicate"])
+def test_joinback_rejects_contract_violations(spark, bad):
+    """The wide-frame join-back must fail loudly on a NULL order key
+    (its outputs would silently NULL) or a duplicate (by, order) key
+    (the join would fan out), without any opt-in switch."""
+    rows = [("a", i, float(i), "p" * 16) for i in range(6)]
+    rows[3] = ("a", None if bad == "NULL order key" else 2, 3.0, "p" * 16)
+    df = spark.createDataFrame(rows, "s string, i int, x double, payload string")
+    res = roll_mean(df, "x", "s", "i", 3, weights=[1.0, 2.0, 3.0], out="r")
+    with pytest.raises(Exception, match=f"data contract violated: {bad}"):
+        res.collect()
+
+
+def test_list_output_null_cells():
+    """array<double> outputs: an all-NaN row is a NULL array, a NaN
+    element a NULL element."""
+    from roll_spark.operators.arrow_ops import _to_arrow
+
+    a = np.array([[np.nan, np.nan], [1.0, np.nan], [2.0, -0.0]])
+    assert _to_arrow(a).to_pylist() == [None, [1.0, None], [2.0, -0.0]]
+    assert _to_arrow(a[:, 1]).to_pylist() == [None, None, -0.0]
+
+
+SEAM_W = 4
+SEAM_WTS = (0.5, 1.0, 1.5, 2.0)
+SEAM_BY = ["s", "g"]
+# (s, g) -> length: a 1-row series, one shorter than min_obs, and longer
+# ones that the chunk path splits
+SEAM_SERIES = {("a", 0): 1, ("a", 1): 2, ("b", 0): 13, ("b", 1): 9, ("c", 7): 30}
+
+
+def _seam_frame(spark, wide):
+    """Series keyed by a string + an int column over irregular event
+    times; x holds both NaN and NULL values, y NULLs."""
+    import datetime as dt
+
+    rng = np.random.default_rng(11)
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = []
+    for (s, g), n in SEAM_SERIES.items():
+        secs = np.cumsum(rng.integers(1, 600, size=n))
+        for i in range(n):
+            x = float(rng.normal())
+            if i % 5 == 3:
+                x = float("nan")
+            elif i % 7 == 4:
+                x = None
+            y = None if i % 6 == 5 else float(rng.normal())
+            rows.append((s, g, i, t0 + dt.timedelta(seconds=int(secs[i])),
+                         x, y, float(i) ** 0.5, "p" * 32))
+    df = spark.createDataFrame(
+        rows, "s string, g int, i int, t timestamp, x double, y double, "
+              "z double, payload string")
+    return df if wide else df.drop("payload")
+
+
+def _seam_series(spark):
+    """Per series, in order: float64 inputs (NaN for NULL) and event µs."""
+    from pyspark.sql import functions as F
+
+    pdf = (_seam_frame(spark, False).withColumn("t_us", F.unix_micros("t"))
+           .toPandas().sort_values(SEAM_BY + ["i"]))
+    return {
+        key: {c: sub[c].to_numpy(dtype=np.float64, na_value=np.nan)
+              for c in ("x", "y", "z", "t_us")}
+        for key, sub in pdf.groupby(SEAM_BY, sort=False)
+    }
+
+
+def _seam_case(case):
+    """(build(df) -> DataFrame, out columns, per-series oracle)."""
+    from roll_spark.operators import arrow_ops, kernels as K
+    from roll_spark.operators.time_windows import ewma_time
+
+    wts = np.asarray(SEAM_WTS)
+    mo = RollSpec(width=SEAM_W, weights=SEAM_WTS, min_obs=3).effective_min_obs
+    if case == "mean":
+        return (lambda df: roll_mean(df, "x", SEAM_BY, "i", SEAM_W,
+                                     weights=SEAM_WTS, min_obs=3, out="r"),
+                ["r"], lambda c: {"r": K.conv_mean(c["x"], SEAM_W, weights=wts,
+                                                   min_obs=mo)})
+    if case == "cov":
+        return (lambda df: roll_cov(df, "x", "y", SEAM_BY, "i", SEAM_W,
+                                    weights=SEAM_WTS, min_obs=3, out="r"),
+                ["r"], lambda c: {"r": K.conv_cov(c["x"], c["y"], SEAM_W,
+                                                  weights=wts, min_obs=mo)})
+    if case == "chunked":
+        spec = RollSpec(width=SEAM_W, weights=SEAM_WTS, min_obs=3,
+                        max_group_rows=6)
+        return (lambda df: arrow_ops.roll_mean(df, "x", SEAM_BY, "i", spec,
+                                               out="r"),
+                ["r"], lambda c: {"r": K.conv_mean(c["x"], SEAM_W, weights=wts,
+                                                   min_obs=mo)})
+    if case == "ewma_time":
+        return (lambda df: ewma_time(df, "x", SEAM_BY, "t", 900.0, min_obs=2,
+                                     out="r"),
+                ["r"], lambda c: {"r": K.conv_ewma_time(c["x"], c["t_us"], 900.0,
+                                                        min_obs=2)})
+    assert case == "lm_k"
+    spec = RollSpec(width=SEAM_W, min_obs=3)
+
+    def oracle(c):
+        res = K.conv_lm_k(np.column_stack([c["x"], c["z"]]), c["y"], SEAM_W,
+                          min_obs=spec.effective_min_obs)
+        return {"lm_" + k: res[k] for k in ("coef", "r2", "se", "intercept")}
+
+    return (lambda df: roll_lm_k(df, ["x", "z"], "y", SEAM_BY, "i", spec),
+            ["lm_coef", "lm_r2", "lm_se", "lm_intercept"], oracle)
+
+
+def _cells(a):
+    """Kernel output as the collected cells: NaN -> None; an all-NaN
+    row of a matrix output -> None."""
+    if a.ndim == 1:
+        return [None if np.isnan(v) else float(v) for v in a]
+    return [None if np.isnan(r).all() else _cells(r) for r in a]
+
+
+@pytest.mark.parametrize("case,wide", [
+    ("mean", False), ("mean", True), ("cov", True), ("chunked", False),
+    ("ewma_time", False), ("lm_k", False), ("lm_k", True),
+])
+def test_bucket_segments_equal_per_series_kernel(spark, case, wide):
+    """Every series in ONE bucket (shuffle partitions 1) and spread over
+    the default bucket count: both must equal the per-series kernel
+    exactly, so no state leaks across a segment seam — 1-row series,
+    series shorter than min_obs, NaN/NULL inputs, a string + int series
+    key, the chunk path, an expanding kernel and list outputs."""
+    build, outs, oracle = _seam_case(case)
+    want = {}
+    for key, c in _seam_series(spark).items():
+        res = oracle(c)
+        want[key] = {o: _cells(np.asarray(res[o])) for o in outs}
+    src_x = {(r["s"], r["g"], r["i"]): r["x"] for r in _seam_frame(spark, wide).collect()}
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    for n in ("1", default):
+        spark.conf.set("spark.sql.shuffle.partitions", n)
+        try:
+            got = (build(_seam_frame(spark, wide))
+                   .select(*SEAM_BY, "i", "x", *outs).collect())
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", default)
+        assert len(got) == sum(SEAM_SERIES.values())
+        for r in got:
+            for o in outs:
+                assert r[o] == want[(r["s"], r["g"])][o][r["i"]], (n, case, r)
+            # inputs pass through untouched: NaN stays NaN, NULL stays NULL
+            x = src_x[(r["s"], r["g"], r["i"])]
+            assert r["x"] == x or (r["x"] != r["x"] and x != x), (n, case, r)

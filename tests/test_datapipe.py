@@ -563,3 +563,45 @@ def test_ngram_jaccard_frac_cap_equals_absolute(spark, docs):
     with _pytest.raises(ValueError):
         ngram_jaccard_pairs(docs, "text", "doc_id",
                             max_shingle_df=5, max_shingle_df_frac=0.1)
+
+
+class _FpHandle:
+    """Stand-in for a cached fingerprint DataFrame."""
+
+    def __init__(self, same=None, unpersist=None):
+        self.same, self.unpersist_exc, self.unpersisted = same, unpersist, False
+
+    def sameSemantics(self, other):
+        if isinstance(self.same, Exception):
+            raise self.same
+        return self.same
+
+    def unpersist(self):
+        if self.unpersist_exc is not None:
+            raise self.unpersist_exc
+        self.unpersisted = True
+
+
+def test_register_fp_cache_swallows_only_dead_session_unpersist(monkeypatch):
+    """Only unpersist() on a stopped session (a Py4JError) is swallowed.
+    A sameSemantics failure raises and leaves the old cache registered,
+    so it is never left persisted and untracked."""
+    from py4j.protocol import Py4JError
+
+    from roll_spark.datapipe import dedup
+
+    dead = _FpHandle(same=False, unpersist=Py4JError("stopped SparkContext"))
+    monkeypatch.setattr(dedup, "_live_fp_cache", [dead])
+    new = _FpHandle()
+    dedup._register_fp_cache(new)
+    assert dedup._live_fp_cache == [new]
+
+    live = _FpHandle(same=False)
+    dedup._register_fp_cache(live)
+    assert new.unpersisted and dedup._live_fp_cache == [live]
+
+    broken = _FpHandle(same=RuntimeError("plan comparison failed"))
+    monkeypatch.setattr(dedup, "_live_fp_cache", [broken])
+    with pytest.raises(RuntimeError, match="plan comparison failed"):
+        dedup._register_fp_cache(_FpHandle())
+    assert dedup._live_fp_cache == [broken] and not broken.unpersisted
